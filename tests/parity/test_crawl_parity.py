@@ -34,7 +34,7 @@ def round_oracle(world):
     return sim.run(world.seeds)
 
 
-def _make_job(spark, world, tmp, use_bloom=True, **cfg_kw):
+def _make_job(spark, world, tmp, **cfg_kw):
     # tiny worlds: shrink physical layout knobs (results are
     # layout-independent — salting/bucketing only affect partitioning)
     cfg = CrawlConfig(
@@ -42,7 +42,6 @@ def _make_job(spark, world, tmp, use_bloom=True, **cfg_kw):
         user_agent=USER_AGENT,
         politeness=POLITENESS,
         round_duration=T,
-        use_bloom=use_bloom,
         salt_buckets=4,
         host_buckets=4,
         **cfg_kw,
@@ -105,111 +104,70 @@ def test_round_model_closure_matches_single_worker_reference(world, round_oracle
     }
 
 
-def test_bloom_off_identical(spark, world, tmp_path_factory, engine_run):
-    job = _make_job(spark, world, tmp_path_factory.mktemp("ckpt_nb"), use_bloom=False)
+def _plant_stale_bloom_log(ckpt, n: int, **stamp) -> None:
+    """Point manifest_r<n>'s seen_bloom log and meta back to round 1's
+    — the state a checkpoint committed by the retired exact-only or
+    cuckoo seen modes was left in: later rounds appended no Bloom
+    words, so the log misses their keys — then override meta fields
+    with ``stamp``."""
+    import json
+    from pathlib import Path
+
+    root = Path(ckpt)
+    old = json.loads((root / "manifest_r1.json").read_text())
+    path = root / f"manifest_r{n}.json"
+    m = json.loads(path.read_text())
+    m["logs"]["seen_bloom"] = old["logs"]["seen_bloom"]
+    m["meta"]["seen_bloom"] = {**old["meta"]["seen_bloom"], **stamp}
+    path.write_text(json.dumps(m, indent=1))
+
+
+def test_stale_bloom_log_rebuilt_on_resume(
+    spark, world, tmp_path_factory, engine_run
+):
+    """The staleness gate in _ensure_filter: a committed seen_bloom
+    log whose ``round`` stamp is older than the manifest round, or
+    whose ``ttl`` differs from the config, can miss seen keys, so
+    resume must rebuild the filter from the URL ledger instead of
+    loading the log. Loading it would turn those keys' Bloom false
+    negatives into definite-unseen verdicts that bypass the exact
+    backstop and re-admit already-crawled URLs."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from web_crawler_search_engine_spark.operators import seen as seen_ops
+
+    ckpt = tmp_path_factory.mktemp("ckpt_stale")
+    job = _make_job(spark, world, ckpt)
     job.start(world.seeds)
-    job.run(max_rounds=60)
-    assert job.final_state() == engine_run.final_state()
-    assert job.admitted_sequences() == engine_run.admitted_sequences()
-
-
-def test_cuckoo_accel_identical(spark, world, tmp_path_factory, engine_run):
-    """seen_accel="cuckoo": the deletable filter as the X1 accelerator
-    — crawl output must be bit-for-bit the Bloom/exact runs' (the
-    no-false-negative + exact-backstop contract). A tiny m_buckets
-    forces heavy bucket collisions (dense fp sharing) so the exact
-    backstop actually earns its keep in this run."""
-    job = _make_job(
-        spark,
-        world,
-        tmp_path_factory.mktemp("ckpt_ck"),
-        seen_accel="cuckoo",
-        cuckoo_m_buckets=1 << 6,
-    )
-    job.start(world.seeds)
-    job.run(max_rounds=60)
-    assert job.final_state() == engine_run.final_state()
-    assert job.admitted_sequences() == engine_run.admitted_sequences()
-
-
-def test_accel_switch_on_resume_identical(spark, world, tmp_path_factory, engine_run):
-    """Switching the accelerator MID-CRAWL over a Bloom-era checkpoint
-    (no seen_cuckoo log in the manifest) must be seamless: the dirty
-    path rebuilds the cuckoo table from the URL ledger inside the next
-    round's commit, seeds and all — a false negative here would
-    re-admit already-crawled URLs and break the bit-for-bit contract."""
-    tmp = tmp_path_factory.mktemp("ckpt_sw")
-    a = _make_job(spark, world, tmp)
-    a.start(world.seeds)
     for _ in range(3):
-        a.run_round()
-    b = _make_job(
-        spark, world, tmp, seen_accel="cuckoo", cuckoo_m_buckets=1 << 6
-    )
-    b.resume()
-    b.run(max_rounds=60)
-    assert b.final_state() == engine_run.final_state()
-    assert b.admitted_sequences() == engine_run.admitted_sequences()
-
-
-def test_accel_flip_flop_cuckoo_stale_identical(
-    spark, world, tmp_path_factory, engine_run
-):
-    """cuckoo→bloom→cuckoo across resumes (ADVICE r3 high): rounds
-    committed under the OTHER accelerator never append to this
-    accel's log, but the manifest meta persists forever, so the old
-    clean-gate (m_buckets match + log exists) accepted a seen_cuckoo
-    log missing the Bloom-era rounds' keys — false negatives then
-    bypassed the exact backstop and silently re-admitted
-    already-crawled URLs. The per-commit ``round`` stamp in the accel
-    meta must force the from-ledger rebuild instead."""
-    tmp = tmp_path_factory.mktemp("ckpt_ffc")
-    a = _make_job(
-        spark, world, tmp, seen_accel="cuckoo", cuckoo_m_buckets=1 << 6
-    )
-    a.start(world.seeds)
-    for _ in range(2):
-        a.run_round()
-    # two rounds under Bloom: the cuckoo log now misses their keys
-    b = _make_job(spark, world, tmp)
-    b.resume()
-    for _ in range(2):
-        b.run_round()
-    # back to cuckoo: the stale round stamp must trigger the rebuild
-    c = _make_job(
-        spark, world, tmp, seen_accel="cuckoo", cuckoo_m_buckets=1 << 6
-    )
-    c.resume()
-    c.run(max_rounds=60)
-    assert c.final_state() == engine_run.final_state()
-    assert c.admitted_sequences() == engine_run.admitted_sequences()
-
-
-def test_accel_flip_flop_bloom_stale_identical(
-    spark, world, tmp_path_factory, engine_run
-):
-    """bloom→cuckoo→bloom — the symmetric stale-log case: the
-    seen_bloom word log misses the cuckoo-era rounds' keys while its
-    meta (m_bits unchanged in a tiny world) still passes the layout
-    gate; a false negative in the Bloom pre-filter marks a seen key
-    definite-unseen with no backstop. The round stamp forces
-    _ensure_filter's from-ledger rebuild."""
-    tmp = tmp_path_factory.mktemp("ckpt_ffb")
-    a = _make_job(spark, world, tmp)
-    a.start(world.seeds)
-    for _ in range(2):
-        a.run_round()
-    b = _make_job(
-        spark, world, tmp, seen_accel="cuckoo", cuckoo_m_buckets=1 << 6
-    )
-    b.resume()
-    for _ in range(2):
-        b.run_round()
-    c = _make_job(spark, world, tmp)
-    c.resume()
-    c.run(max_rounds=60)
-    assert c.final_state() == engine_run.final_state()
-    assert c.admitted_sequences() == engine_run.admitted_sequences()
+        job.run_round()
+    ckpt_ttl = str(ckpt) + "_ttl"
+    shutil.copytree(str(ckpt), ckpt_ttl)
+    # round stamp 1 < 3 (ttl matches); round stamp 3 with ttl 2 != None
+    _plant_stale_bloom_log(ckpt, 3)
+    _plant_stale_bloom_log(ckpt_ttl, 3, round=3, ttl=2)
+    for path in (ckpt, ckpt_ttl):
+        job2 = _make_job(spark, world, path)
+        assert job2.resume() == 3
+        # the planted log really is missing seen keys: without the
+        # gate this resume could not stay bit-for-bit
+        store = job2.store
+        meta = store.manifest()["meta"]["seen_bloom"]
+        words = (
+            store.load_log("seen_bloom")
+            .groupBy("word_id")
+            .agg(F.bit_or("word").alias("word"))
+        )
+        keys = store.load_log("frontier_log").select("url_key").distinct()
+        n_maybe = seen_ops.maybe_seen_keys(
+            keys, words, "url_key", meta["m_bits"], meta["k"]
+        ).count()
+        assert n_maybe < keys.count()
+        job2.run(max_rounds=60)
+        assert job2.final_state() == engine_run.final_state()
+        assert job2.admitted_sequences() == engine_run.admitted_sequences()
 
 
 def test_bucketed_ledger_cutover_identical(

@@ -15,11 +15,20 @@ physical plans are the two shapes under test:
     python tools/ledger_bench.py                 # 24M ledger, 4.8M batch
     python tools/ledger_bench.py --n 24000000 --batch 4800000 \
         --cpus 8 --buckets 64 --reps 3
+    python tools/ledger_bench.py --ttl           # TTL liveness-view shape
+    python tools/ledger_bench.py --skip-plain --n 2400000000  # bucketed only
 
-Prints one JSON line: per-rep seconds for both layouts, mins, and the
-plain/bucketed speedup. The scaling claim this evidences: the plain
-join's shuffled bytes grow with the LEDGER while the bucketed join's
-stay O(batch) — re-run with --n 10x to watch the gap widen.
+``--skip-plain`` writes and measures only the bucketed layout, for
+ledger sizes whose plain copy would not fit on disk.
+
+Prints one JSON line. Always present: ``metric``, ``n_ledger``,
+``n_batch``, ``cpus``, ``buckets``, ``reps`` (per-rep seconds keyed by
+layout — only ``bucketed`` under ``--skip-plain``) and
+``min_bucketed_sec``. Only without ``--skip-plain``: ``min_plain_sec``
+and the plain/bucketed ``speedup``. The scaling claim this evidences:
+the plain join's shuffled bytes grow with the LEDGER while the
+bucketed join's stay O(batch) — re-run with --n 10x to watch the gap
+widen.
 """
 
 from __future__ import annotations

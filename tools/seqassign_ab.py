@@ -153,6 +153,12 @@ def run_shape(shape: str, links, base: int, max_parents: int):
         )
         grouped = skinny.groupBy("parent_seq").agg(F.max("_rk").alias("_n"))
         head = grouped.take(max_parents + 1)
+        # take() keeps an arbitrary subset past the cap, and rows of
+        # an uncovered parent would silently drop out of the inner
+        # joins below — fail loudly instead
+        assert len(head) <= max_parents, (
+            f"more than {max_parents} distinct parents"
+        )
         cnts = sorted(head, key=lambda r: r["parent_seq"])
         acc = base
         offs = []
@@ -182,6 +188,12 @@ def run_shape(shape: str, links, base: int, max_parents: int):
         )
         grouped = skinny.groupBy("parent_seq").agg(F.max("_rk").alias("_n"))
         head = grouped.take(max_parents + 1)
+        # take() keeps an arbitrary subset past the cap, and rows of
+        # an uncovered parent would silently drop out of the inner
+        # joins below — fail loudly instead
+        assert len(head) <= max_parents, (
+            f"more than {max_parents} distinct parents"
+        )
         cnts = sorted(head, key=lambda r: r["parent_seq"])
         acc = base
         offs = []
